@@ -114,8 +114,7 @@ object ScalingBench {
     val res = Crawl.run(spark, rd("pages"), rd("seeds"),
       Some(rd("robots")), Some(rd("dopp")), Some(rd("cdx")),
       Crawl.Config(maxRounds = rounds, perHostBudget = Int.MaxValue,
-        numSlots = slots, dedupSizeThreshold = 32, numShards = 16,
-        collectStats = false))
+        numSlots = slots, dedupSizeThreshold = 32, numShards = 16))
     // force the full output (digesting, revisit construction) to materialize
     res.warcRows.write.format("noop").mode("overwrite").save()
     val secs = (System.nanoTime() - t0) / 1e9

@@ -491,18 +491,14 @@ object SparkEntry {
 
     "q31_crawl_round" -> ((s, dir) => {
       val n = 500L
-      // collectStats=false drops the per-round counter jobs (two driver
-      // round-trips/round; counters derivable from warc_rows — the Config's
-      // own documented bench setting); concurrentJobs=true overlaps the
-      // independent per-round materializations. Both are output-invariant
-      // (hash-asserted in tools.Q31Variants: identical across all four
-      // combinations; measured 6.1 -> 4.5 s warm at sf-equivalent scale).
+      // two rounds through the one crawl-round path; the per-round counters
+      // ride the round's own materializations (CrawlSpec checks them
+      // against recounts of these warc rows)
       graft.jobs.Crawl.run(s, SyntheticWeb.pages(s, n), SyntheticWeb.seeds(s, 200, n),
         Some(SyntheticWeb.robots(s)), Some(SyntheticWeb.doppelganger(s, n)),
         Some(SyntheticWeb.cdx(s, n)),
         graft.jobs.Crawl.Config(maxRounds = 2, perHostBudget = 40, numSlots = 8,
-          dedupSizeThreshold = 32, numShards = 4,
-          collectStats = false, concurrentJobs = true),
+          dedupSizeThreshold = 32, numShards = 4),
         dns = Some(SyntheticWeb.dns(s)))
         .warcRows
         .groupBy(col("round"), col("warc_type"), col("dedupe_source"))
@@ -2157,7 +2153,7 @@ object SparkEntry {
         |grams AS (SELECT DISTINCT doc_id, g FROM (SELECT * FROM g3 UNION ALL SELECT * FROM gshort)),
         |dfreq AS (SELECT g, count(*) AS df FROM grams GROUP BY g)
         |SELECT doc_id, count(*) AS n_grams,
-        |       sum(CASE WHEN df >= 2 THEN 1 ELSE 0 END) AS n_shared,
+        |       CAST(sum(CASE WHEN df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_shared,
         |       round(CAST(sum(CASE WHEN df >= 2 THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6) AS shared_frac
         |FROM grams JOIN dfreq USING (g)
         |GROUP BY doc_id ORDER BY doc_id""".stripMargin

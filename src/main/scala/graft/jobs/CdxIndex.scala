@@ -133,6 +133,11 @@ object CdxIndex {
     val spark = sorted.sparkSession
     val root = java.nio.file.Paths.get(outDir).toAbsolutePath.normalize
     java.nio.file.Files.createDirectories(root)
+    // a crashed earlier run can leave attempt temp files behind (a killed
+    // executor never reaches the cleanup below); sweep them before this
+    // run's attempts start writing theirs
+    val stale = java.nio.file.Files.newDirectoryStream(root, ".cdx-*.attempt-*.tmp")
+    try stale.forEach(p => java.nio.file.Files.deleteIfExists(p)) finally stale.close()
     val rootStr = root.toString
     val blocks = sorted.select(col("cdx_line")).as(
       org.apache.spark.sql.Encoders.STRING).rdd
@@ -151,28 +156,36 @@ object CdxIndex {
             .map(_.taskAttemptId()).getOrElse(0L)
           val tmp = java.nio.file.Paths.get(rootStr)
             .resolve(f".$shard%s.attempt-$attempt%d.tmp")
-          val out = new java.io.BufferedOutputStream(
-            java.nio.file.Files.newOutputStream(tmp))
           var offset = 0L
           var seq = 0
+          // a failed write or rename deletes its own temp file
           val rows = try {
-            it.grouped(blockLines).map { blk =>
-              val bos = new java.io.ByteArrayOutputStream()
-              val gz = new java.util.zip.GZIPOutputStream(bos)
-              gz.write((blk.mkString("\n") + "\n").getBytes("UTF-8"))
-              gz.finish(); gz.close()
-              val bytes = bos.toByteArray
-              out.write(bytes)
-              val fields = blk.head.split(" ", 3)
-              val row = (fields(0), fields(1), shard, offset, bytes.length.toLong, seq)
-              offset += bytes.length
-              seq += 1
-              row
-            }.toVector // drain before closing the shard stream
-          } finally out.close()
-          java.nio.file.Files.move(tmp, path,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+            val out = new java.io.BufferedOutputStream(
+              java.nio.file.Files.newOutputStream(tmp))
+            val written = try {
+              it.grouped(blockLines).map { blk =>
+                val bos = new java.io.ByteArrayOutputStream()
+                val gz = new java.util.zip.GZIPOutputStream(bos)
+                gz.write((blk.mkString("\n") + "\n").getBytes("UTF-8"))
+                gz.finish(); gz.close()
+                val bytes = bos.toByteArray
+                out.write(bytes)
+                val fields = blk.head.split(" ", 3)
+                val row = (fields(0), fields(1), shard, offset, bytes.length.toLong, seq)
+                offset += bytes.length
+                seq += 1
+                row
+              }.toVector // drain before closing the shard stream
+            } finally out.close()
+            java.nio.file.Files.move(tmp, path,
+              java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+            written
+          } catch {
+            case e: Throwable =>
+              java.nio.file.Files.deleteIfExists(tmp)
+              throw e
+          }
           rows.iterator
         }
       }

@@ -1,9 +1,6 @@
 package graft.jobs
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.fetch.Fetch
@@ -26,13 +23,13 @@ import graft.snapshot.SnapshotStore
  */
 object Crawl {
 
-  /** Dedicated pool for concurrent Spark job submission (round-internal
-    * overlap). Small and daemonized: it only ever blocks on Spark actions. */
-  private lazy val jobEc: ExecutionContext = ExecutionContext.fromExecutorService(
-    java.util.concurrent.Executors.newFixedThreadPool(4, r => {
-      val t = new Thread(r, "graft-crawl-jobs"); t.setDaemon(true); t
-    }))
-
+  /**
+   * One crawl-round path: every round materializes its state with an eager
+   * `localCheckpoint` (or rebinds it to the committed snapshot), probes the
+   * seen set through the Bloom prefilter, submits its jobs sequentially and
+   * collects the reference's counters (warc.go:62-73) as `Observation`s on
+   * materializations that run anyway.
+   */
   case class Config(
       maxRounds: Int = 3,
       perHostBudget: Int = 100,
@@ -46,37 +43,18 @@ object Crawl {
       // build the (8x-heavier, never-probed-by-scheduling) cuckoo shards too;
       // on only when bounded/deletable dedup-cache semantics are wanted
       buildCuckoo: Boolean = false,
-      // submit independent per-round jobs concurrently. Off by default: with
-      // executor-sized heaps the overlapped materializations contend for the
-      // unified memory pool (measured: +10% wall at 8 pinned cores / 8g heap);
-      // worth enabling on real clusters where storage memory is plentiful and
-      // driver job-submission latency dominates
-      concurrentJobs: Boolean = false,
       baseEpoch: Long = 1700000000L,
-      useBloomPrefilter: Boolean = true,
       // snapshot retention: keep the last K committed versions, expiring
       // older manifests + vacuuming their orphaned data files after each
       // round's commit. None = keep everything (full time-travel history).
       // A 100-round crawl otherwise accumulates one manifest per round AND
       // pins every frontier/filters generation's files forever.
       snapshotKeepLast: Option[Int] = None,
-      // per-round counter collection (A1 analog). Costs two extra driver
-      // round-trips per round; benchmarks turn it off (outputs unchanged —
-      // the counters are derivable from warc_rows afterwards).
-      collectStats: Boolean = true,
       // discover outlinks by parsing the fetched HTML payload (extract ->
       // RFC 3986 resolve -> canonicalize) instead of exploding the
       // fixture's pre-tokenized link spans; the fetched payload renders as
       // HTML so the extractor has real markup to parse
-      parseLinks: Boolean = false,
-      // truncate lineage each round via localCheckpoint. Without it the
-      // logical plan DEEPENS every round (seen = seen ∪ new, frontier =
-      // f(prev round's full DAG)) and Catalyst re-analyzes the whole history
-      // at each action — the classic iterative-algorithm lineage blowup; at
-      // a 100-round crawl the driver, not the cluster, becomes the
-      // bottleneck. Snapshot-store runs get truncation for free (state
-      // rebinds to committed parquet).
-      checkpointState: Boolean = true)
+      parseLinks: Boolean = false)
 
   case class RoundStats(round: Int, scheduled: Long, responses: Long, revisits: Long,
                         revisitsByTier: Map[String, Long], bytes: Long, outlinks: Long)
@@ -144,14 +122,6 @@ object Crawl {
       store.get.read(spark, "filters").map(df => FilterTable(df, cfg.numShards))
     }
 
-    val timing = sys.env.contains("GRAFT_TIMING")
-    var t0 = System.nanoTime()
-    def lap(label: String): Unit = if (timing) {
-      val t = System.nanoTime()
-      println(f"[timing] $label: ${(t - t0) / 1e9}%.2f s")
-      t0 = t
-    }
-
     val stats = scala.collection.mutable.Buffer[RoundStats]()
     var allWarc: Option[DataFrame] = store.flatMap(_.read(spark, "warc_rows"))
     var totalScheduled = resumed.map(_.counts.getOrElse("total_scheduled", 0L)).getOrElse(0L)
@@ -161,75 +131,44 @@ object Crawl {
       val fcfg = Fetch.Config(round, cfg.baseEpoch + round, cfg.dedupSizeThreshold,
         maxReadBeforeTruncate = cfg.maxReadBeforeTruncate, parseLinks = cfg.parseLinks)
 
-      val scheduledPlan = Scheduler.schedule(spark, frontier, seenKeys,
-        if (cfg.useBloomPrefilter) filters else None,
-        robots, Scheduler.Config(cfg.perHostBudget, cfg.maxPerRound, cfg.numSlots, salt = round))
-      val scheduled =
-        if (cfg.checkpointState) scheduledPlan.localCheckpoint() else scheduledPlan.cache()
-      lap(s"r$round schedule+checkpoint")
-      // With cfg.concurrentJobs, independent per-round jobs are SUBMITTED
-      // CONCURRENTLY (Spark's scheduler interleaves their stages), hiding
-      // per-job planning + scheduling latency — the driver-serial fraction
-      // that caps N->4N efficiency on real clusters. Default is sequential:
-      // see the Config scaladoc (overlapped materializations contend for
-      // storage memory on executor-sized heaps).
-      implicit val ec: ExecutionContext = Crawl.jobEc
+      val scheduled = Scheduler.schedule(spark, frontier, seenKeys, filters, robots,
+        Scheduler.Config(cfg.perHostBudget, cfg.maxPerRound, cfg.numSlots, salt = round))
+        .localCheckpoint()
       // shard-filter build: one aggregation, only P blobs shuffle, none
       // reach the driver; the round count is then a P-row sum over the
       // materialized table (the driver sees ONE long, not the blobs)
-      def buildFilters(): DataFrame = {
-        val plan = SeenSetOps.buildFilterTable(
-          scheduled.select(col("url_key")), "url_key", cfg.numShards,
-          cfg.bloomBlocksPerShard, cfg.cuckooBucketsPerShard,
-          includeCuckoo = cfg.buildCuckoo)
-        if (cfg.checkpointState) plan.df.localCheckpoint() else plan.df.cache()
-      }
-      def doFetch(): DataFrame = {
-        val plan = Fetch.fetch(scheduled, pages, fcfg, dns)
-        if (cfg.checkpointState) plan.localCheckpoint() else plan.cache()
-      }
-      // concurrent mode starts the fetch join (depends only on `scheduled`)
-      // alongside the filter build; an empty final round then wastes one
-      // cheap empty-join materialization
-      val fetchedF: Option[Future[DataFrame]] =
-        if (cfg.concurrentJobs) Some(Future(doFetch())) else None
-      val newFilters = FilterTable(buildFilters(), cfg.numShards)
+      val newFilters = FilterTable(SeenSetOps.buildFilterTable(
+        scheduled.select(col("url_key")), "url_key", cfg.numShards,
+        cfg.bloomBlocksPerShard, cfg.cuckooBucketsPerShard,
+        includeCuckoo = cfg.buildCuckoo).df.localCheckpoint(), cfg.numShards)
       val nScheduled = newFilters.df.agg(sum(col("n"))).collect()(0) match {
         case r if r.isNullAt(0) => 0L
         case r => r.getLong(0)
       }
-      lap(s"r$round filters+count")
 
       if (nScheduled == 0) {
-        fetchedF.foreach(f => Await.result(f, Duration.Inf).unpersist(blocking = false))
         scheduled.unpersist()
         continue = false
       } else {
-        val fetched = fetchedF.map(Await.result(_, Duration.Inf)).getOrElse(doFetch())
-        lap(s"r$round fetch+checkpoint")
-        val doStats = cfg.collectStats || store.nonEmpty
+        val fetched = Fetch.fetch(scheduled, pages, fcfg, dns).localCheckpoint()
         // metrics ride the materialization itself: Dataset.observe attaches
         // a CollectMetrics node, so the checkpoint that materializes the
         // round's warc rows ALSO delivers the reference's atomic counters
         // (warc.go:62-73; A1) — no second scan, no extra job. Tier counts
         // are conditional sums over the fixed tier set (dialer.go:707-735).
-        val obs = new org.apache.spark.sql.Observation(s"graft-round-$round")
+        val obs = new Observation(s"graft-round-$round")
         def tierCount(t: String) =
           sum(when(col("seq") === 0 && col("dedupe_source") === t, 1L).otherwise(0L)).as(t)
-        val warcPlan0 = Fetch.buildWarcRows(fetched, digestSeen, dopp, cdx, fcfg)
+        val warc = Fetch.buildWarcRows(fetched, digestSeen, dopp, cdx, fcfg)
           .withColumn("round", lit(round))
-        val warcPlan =
-          if (doStats) warcPlan0.observe(obs,
+          .observe(obs,
             tierCount("none"), tierCount("local"), tierCount("doppelganger"), tierCount("cdx"),
             sum(when(col("seq") === 0, col("payload_size")).otherwise(0L)).as("bytes"))
-          else warcPlan0
-        val warc = if (cfg.checkpointState) warcPlan.localCheckpoint() else warcPlan.cache()
-        if (!cfg.checkpointState && doStats) warc.count() // cache() alone defers the action
-        lap(s"r$round warc+checkpoint")
+          .localCheckpoint()
         val newDigests = Fetch.newDigestEntries(warc, fcfg)
         val links = Fetch.outlinks(fetched, fcfg)
 
-        val metrics = if (doStats) obs.get else Map.empty[String, Any]
+        val metrics = obs.get
         val byTier = Seq("none", "local", "doppelganger", "cdx")
           .map(t => t -> metrics.get(t).map(_.asInstanceOf[Long]).getOrElse(0L)).toMap
         val bytes = metrics.get("bytes").map(_.asInstanceOf[Long]).getOrElse(0L)
@@ -242,38 +181,30 @@ object Crawl {
         seenKeys = seenKeys.unionByName(newSeen)
         digestSeen = digestSeen.unionByName(newDigests.select(
           col("payload_digest"), col("record_id"), col("target_uri"), col("warc_date"), col("size")))
+        // the outlink counter rides the frontier's own materialization: the
+        // checkpoint below, or the frontier table write inside the commit
+        val linkObs = new Observation(s"graft-outlinks-$round")
         frontier = hostRanks
           .map(r => graft.ops.GraphOps.rankPriorities(links, "url", r))
           .getOrElse(links)
-        if (cfg.checkpointState && store.isEmpty) {
-          // four independent state materializations (the merged filter
-          // checkpoint also truncates the union-groupBy lineage chain across
-          // rounds); concurrent mode overlaps their job latencies
-          if (cfg.concurrentJobs) {
-            val fSeen = Future(seenKeys.localCheckpoint())
-            val fDigest = Future(digestSeen.localCheckpoint())
-            val fFrontier = Future(frontier.localCheckpoint())
-            val fFilters = Future(filters.map(f => FilterTable(f.df.localCheckpoint(), f.numShards)))
-            seenKeys = Await.result(fSeen, Duration.Inf)
-            digestSeen = Await.result(fDigest, Duration.Inf)
-            frontier = Await.result(fFrontier, Duration.Inf)
-            filters = Await.result(fFilters, Duration.Inf)
-          } else {
-            seenKeys = seenKeys.localCheckpoint()
-            digestSeen = digestSeen.localCheckpoint()
-            frontier = frontier.localCheckpoint()
-            filters = filters.map(f => FilterTable(f.df.localCheckpoint(), f.numShards))
-          }
+          .observe(linkObs, count(lit(1)).as("outlinks"))
+        if (store.isEmpty) {
+          // truncate lineage every round: otherwise the plan deepens each
+          // round (seen = seen ∪ new, frontier = f(last round's DAG)) and
+          // Catalyst re-analyzes the whole history at every action. The
+          // merged filter checkpoint also cuts the union-groupBy chain.
+          // Snapshot-store runs truncate by rebinding to the commit below.
+          seenKeys = seenKeys.localCheckpoint()
+          digestSeen = digestSeen.localCheckpoint()
+          frontier = frontier.localCheckpoint()
+          filters = filters.map(f => FilterTable(f.df.localCheckpoint(), f.numShards))
           // scheduled/fetched are fully consumed once the round's state is
           // checkpointed (warc stays: the final output union reads it)
           scheduled.unpersist(blocking = false)
           fetched.unpersist(blocking = false)
         }
-        lap(s"r$round state checkpoints")
         totalScheduled += nScheduled
         allWarc = Some(allWarc.map(_.unionByName(warc)).getOrElse(warc))
-        val nLinks = if (doStats) frontier.count() else -1L
-        stats += RoundStats(round, nScheduled, nResp, nRevisit, byTier - "none", bytes, nLinks)
 
         store.foreach { s =>
           import spark.implicits._
@@ -305,6 +236,8 @@ object Crawl {
           filters = s.read(spark, "filters").map(df => FilterTable(df, cfg.numShards))
           allWarc = s.read(spark, "warc_rows")
         }
+        val nLinks = linkObs.get.get("outlinks").map(_.asInstanceOf[Long]).getOrElse(0L)
+        stats += RoundStats(round, nScheduled, nResp, nRevisit, byTier - "none", bytes, nLinks)
 
         round += 1
       }

@@ -156,6 +156,30 @@ class CdxIndexSpec extends SparkSpec {
     assert(spark.read.text(s"$outDir/cluster.idx").count() === rows.length)
   }
 
+  test("zipnum: a crashed run's attempt temp files are swept; shards unchanged") {
+    val warcDir = Files.createTempDirectory("zipnum-tmp-src").toString
+    WarcSink.write(responses(40), warcDir, maxRecordsPerFile = 15, gzip = true)
+    def shards(dir: String): Map[String, Seq[Byte]] = {
+      val ds = Files.newDirectoryStream(Paths.get(dir), "cdx-*.gz")
+      try {
+        val m = Map.newBuilder[String, Seq[Byte]]
+        ds.forEach(p => m += p.getFileName.toString -> Files.readAllBytes(p).toSeq)
+        m.result()
+      } finally ds.close()
+    }
+    val clean = Files.createTempDirectory("zipnum-clean").toString
+    graft.jobs.CdxIndex.writeZipnum(spark, warcDir, clean, blockLines = 7)
+
+    val outDir = Files.createTempDirectory("zipnum-stale").toString
+    Files.writeString(Paths.get(outDir, ".cdx-00000.gz.attempt-99.tmp"), "partial shard")
+    graft.jobs.CdxIndex.writeZipnum(spark, warcDir, outDir, blockLines = 7)
+    val left = Paths.get(outDir).toFile.list().filter(_.endsWith(".tmp"))
+    assert(left.isEmpty, s"temp files left behind: ${left.toSeq}")
+    val want = shards(clean)
+    assert(want.nonEmpty)
+    assert(shards(outDir) === want)
+  }
+
   test("nearest-capture lookup: parse round-trip, numeric-nearest pick, earlier-wins tie") {
     import spark.implicits._
     // 3 captures per url at ts ...20, ...40, ...41 (seconds field)

@@ -231,6 +231,34 @@ class CrawlSpec extends SparkSpec {
     assert(sa.sameElements(sb), "seen set diverged after resume")
   }
 
+  test("round counters: in-memory and snapshot-store runs agree with recounts") {
+    val (pages, seeds, robots, dopp, cdx) = world(spark)
+    val mem = Crawl.run(spark, pages, seeds, Some(robots), Some(dopp), Some(cdx), cfg(3))
+    val store = new SnapshotStore(Files.createTempDirectory("graft-snap-stats").toString)
+    val stored = Crawl.run(spark, pages, seeds, Some(robots), Some(dopp), Some(cdx), cfg(3),
+      Some(store))
+    assert(mem.rounds.map(_.round) === Seq(0, 1, 2))
+    // the counters ride different materializations on the two paths (state
+    // checkpoints vs the snapshot commit's table writes)
+    assert(mem.rounds === stored.rounds)
+
+    // tier counts and bytes recomputed from the round's fetch rows
+    val recount = mem.warcRows.filter(col("seq") === 0)
+      .groupBy(col("round"), col("dedupe_source"))
+      .agg(count(lit(1)).as("n"), sum(col("payload_size")).cast("long").as("bytes"))
+      .collect().groupBy(_.getAs[Int]("round"))
+    mem.rounds.foreach { s =>
+      val rows = recount(s.round)
+      val tiers = (s.revisitsByTier + ("none" -> s.responses)).filter(_._2 > 0)
+      assert(rows.map(r => r.getAs[String]("dedupe_source") -> r.getAs[Long]("n")).toMap === tiers,
+        s"round ${s.round} tier counts")
+      assert(rows.map(_.getAs[Long]("bytes")).sum === s.bytes, s"round ${s.round} bytes")
+      assert(s.responses + s.revisits === s.scheduled, s"round ${s.round} fetches")
+    }
+    // the last round's outlinks are the committed frontier
+    assert(stored.rounds.last.outlinks === store.read(spark, "frontier").get.count())
+  }
+
   test("snapshot retention during the crawl: bounded manifests, identical outputs") {
     val (pages, seeds, robots, dopp, cdx) = world(spark)
     val plain = Crawl.run(spark, pages, seeds, Some(robots), Some(dopp), Some(cdx), cfg(3))

@@ -53,6 +53,32 @@ class DedupOpsSpec extends SparkSpec {
       assert(r.getSeq[Long](0) === r.getSeq[Long](1))
       assert(r.getLong(2) === r.getLong(3))
     }
+
+    // the portable (DuckDB-reproducible) pair: per-token md5-prefix hashes,
+    // then per-slot min of XOR-salted hashes; empty and non-ASCII tokens
+    // exercise the UTF-8 encoding, and the appended tokens keep every hash
+    // set non-empty
+    val salts = Seq.fill(16)(rnd.nextLong())
+    val portable = staged
+      .withColumn("utoks", concat(col("toks"),
+        array(lit(""), lit("naïve"), lit("東京"), lit("😀"), col("id").cast("string"))))
+      .withColumn("hof_ph", transform(col("utoks"), t => graft.ops.PipelineOps.portableHash64(t)))
+      .select(
+        col("hof_ph"),
+        graft.functions.SketchExprs.portable_hash64_tokens(col("utoks")).as("krn_ph"),
+        array(salts.map(s => array_min(transform(col("hof_ph"), h => h.bitwiseXOR(lit(s))))): _*)
+          .as("hof_xor"),
+        graft.functions.SketchExprs.xor_min_sig(col("hof_ph"), salts).as("krn_xor"))
+      .collect()
+    portable.foreach { r =>
+      assert(r.getSeq[Long](0).nonEmpty)
+      assert(r.getSeq[Long](0) === r.getSeq[Long](1))
+      assert(r.getSeq[Long](2) === r.getSeq[Long](3))
+    }
+    // empty hash set: every slot stays at the fold's Long.MaxValue init
+    val empty = spark.range(1).select(graft.functions.SketchExprs.xor_min_sig(
+      typedLit(Seq.empty[Long]), salts)).head().getSeq[Long](0)
+    assert(empty === Seq.fill(salts.size)(Long.MaxValue))
   }
 
   test("connected components match union-find on a seeded random graph + long chain") {

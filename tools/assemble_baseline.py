@@ -101,12 +101,6 @@ fraction (job scheduling, Catalyst planning, AQE re-optimization) that a real
 10^10-URL design point a round schedules 10^7-10^8 URLs per wave and the
 driver share amortizes to <1%.
 
-The engine exposes `Crawl.Config.concurrentJobs` to overlap independent
-per-round jobs (state checkpoints, filter build vs fetch join) and hide
-driver job latency on real clusters; it defaults off locally because
-overlapped materializations contend for the single-box storage-memory pool
-(measured neutral-to-negative here).
-
 ## Absolute throughput vs the reference
 
 The reference publishes no throughput numbers (benchmark harnesses only,
