@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.jobs.Crawl
+import graft.obs.QueryProfile
 import graft.web.SyntheticWeb
 
 /**
@@ -26,16 +27,9 @@ object ScalingBench {
       .master(s"local[$cores]")
       .appName(s"graft-scaling-$cores")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // AQE on: measured faster at every level (its shuffle optimizations
-      // outweigh the per-stage driver re-planning cost on this workload)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_AQE", "true"))
+      // AQE stays on (Spark's default; measured faster at every level: its
+      // shuffle optimizations outweigh the per-stage re-planning cost here)
       .config("spark.sql.adaptive.coalescePartitions.enabled", "false") // keep plans identical
-      // scan-side working-set lever (the L3-attribution predicts smaller
-      // per-task inputs scale better at high concurrency): bytes per scan
-      // task, default Spark's 128m
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_MAXPART", "134217728"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -62,79 +56,34 @@ object ScalingBench {
     dir
   }
 
-  /** Wall-clock NOT covered by any running Spark job = the driver-serial
-    * fraction (planning, AQE re-optimization, job submission, driver-side
-    * bookkeeping between jobs) — the share a real 4N-executor cluster does
-    * NOT shrink by adding executors. Job intervals are merged (concurrent
-    * jobs overlap) and subtracted from the measured wall. */
-  private final class DriverGapListener extends org.apache.spark.scheduler.SparkListener {
-    private val intervals = scala.collection.mutable.Buffer[(Long, Long)]()
-    private val open = scala.collection.mutable.Map[Int, Long]()
-    var jobs = 0
-    var taskMs = 0L // Σ executor task wall — taskMs / busySecs = avg in-job parallelism
-    override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      synchronized { open(js.jobId) = js.time; jobs += 1 }
-    override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-      synchronized {
-        open.remove(je.jobId).foreach(s => intervals += ((s, je.time)))
-      }
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      synchronized { if (te.taskInfo != null) taskMs += te.taskInfo.duration }
-    /** Seconds covered by >=1 job within [w0, w1] (ms epoch). */
-    def busySecs(w0: Long, w1: Long): Double = synchronized {
-      val clipped = intervals.map { case (s, e) => (math.max(s, w0), math.min(e, w1)) }
-        .filter(t => t._2 > t._1).sortBy(_._1)
-      var busy = 0L; var curS = -1L; var curE = -1L
-      clipped.foreach { case (s, e) =>
-        if (s > curE) { if (curE > curS) busy += curE - curS; curS = s; curE = e }
-        else curE = math.max(curE, e)
-      }
-      if (curE > curS) busy += curE - curS
-      busy / 1e3
-    }
-  }
-
   /** One timed crawl over the parquet fixtures; returns (urls, wall seconds). */
   private def runOnce(spark: SparkSession, nPages: Long, nSeeds: Long,
                       rounds: Int, slots: Int): (Long, Double) = {
-    val dir = fixturesDir(spark, nPages, nSeeds) // BEFORE the listener: the
-    // fixture-build jobs (first run at a size) must not pollute jobs/taskMs
-    val gaps = sys.env.get("SPARK_GRAFT_BENCH_JOBGAPS").map { _ =>
-      val l = new DriverGapListener; spark.sparkContext.addSparkListener(l); l
-    }
-    def gcMs: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
-    val gc0 = gcMs
+    val dir = fixturesDir(spark, nPages, nSeeds) // BEFORE the profile: the
+    // fixture-build jobs (first run at a size) must not pollute its counters
     def rd(name: String) = spark.read.parquet(s"$dir/$name")
-    val w0 = System.currentTimeMillis()
-    val t0 = System.nanoTime()
-    val res = Crawl.run(spark, rd("pages"), rd("seeds"),
-      Some(rd("robots")), Some(rd("dopp")), Some(rd("cdx")),
-      Crawl.Config(maxRounds = rounds, perHostBudget = Int.MaxValue,
-        numSlots = slots, dedupSizeThreshold = 32, numShards = 16))
-    // force the full output (digesting, revisit construction) to materialize
-    res.warcRows.write.format("noop").mode("overwrite").save()
-    val secs = (System.nanoTime() - t0) / 1e9
-    gaps.foreach { l =>
-      // listener events are async; let the bus drain before reading
-      org.apache.spark.sql.graft.Bridge.waitListenerBusEmpty(spark.sparkContext)
-      val busy = l.busySecs(w0, System.currentTimeMillis())
-      val avgPar = if (busy > 0) l.taskMs / 1e3 / busy else 0.0
-      println(f"JOBGAPS jobs=${l.jobs} wall=$secs%.1f busy=$busy%.1f " +
-        f"driverSerial=${secs - busy}%.1f (${100 * (secs - busy) / secs}%.1f%%) " +
-        f"taskSecs=${l.taskMs / 1e3}%.1f avgParallelism=$avgPar%.1f " +
-        f"gcSecs=${(gcMs - gc0) / 1e3}%.1f")
-      spark.sparkContext.removeSparkListener(l)
+    var scheduled = 0L
+    val p = QueryProfile.of(spark) {
+      val res = Crawl.run(spark, rd("pages"), rd("seeds"),
+        Some(rd("robots")), Some(rd("dopp")), Some(rd("cdx")),
+        Crawl.Config(maxRounds = rounds, perHostBudget = Int.MaxValue,
+          numSlots = slots, dedupSizeThreshold = 32, numShards = 16))
+      // force the full output (digesting, revisit construction) to materialize
+      res.warcRows.write.format("noop").mode("overwrite").save()
+      scheduled = res.totalScheduled
     }
-    (res.totalScheduled, secs)
+    val secs = p.wallSecs
+    // driver-serial = wall not covered by any job: the share a real
+    // 4N-executor cluster does NOT shrink by adding executors
+    println(f"JOBGAPS jobs=${p.jobs} wall=$secs%.1f busy=${p.busySecs}%.1f " +
+      f"driverSerial=${p.driverSerialSecs}%.1f (${100 * p.driverSerialSecs / secs}%.1f%%) " +
+      f"taskSecs=${p.taskSecs}%.1f avgParallelism=${p.parallelism}%.1f " +
+      f"gcSecs=${p.gcSecs}%.1f")
+    (scheduled, secs)
   }
 
   private def measure(cores: Int, shufflePartitions: Int, nPages: Long,
-                      nSeeds: Long, rounds: Int, slots: Int,
-                      warmup: Boolean): (Long, Double) = {
+                      nSeeds: Long, rounds: Int, warmup: Boolean): (Long, Double) = {
     val spark = sessionWith(cores, shufflePartitions)
     spark.sparkContext.setLogLevel("ERROR")
     try {
@@ -143,8 +92,8 @@ object ScalingBench {
       // compiles different classes and the measured run would pay full
       // Janino+JIT cost (observed: a cold first level costs ~120 s extra
       // regardless of cores)
-      if (warmup) runOnce(spark, nPages, nSeeds, rounds, slots)
-      runOnce(spark, nPages, nSeeds, rounds, slots)
+      if (warmup) runOnce(spark, nPages, nSeeds, rounds, shufflePartitions)
+      runOnce(spark, nPages, nSeeds, rounds, shufflePartitions)
     } finally spark.stop()
   }
 
@@ -162,19 +111,13 @@ object ScalingBench {
     // and 32 cores (36.8 vs 47.7-49.5 s); 512 over-fragments (77.9 s at 8).
     val shuffleParts = sys.env.get("SPARK_GRAFT_BENCH_PARTS").map(_.toInt)
       .getOrElse(math.max(levels.max * 8, 64))
-    // politeness slots normally track shuffle parts (one sort run per slot);
-    // overridable independently to probe the slot-count/working-set lever at
-    // constant shuffle partitioning
-    val slots = sys.env.get("SPARK_GRAFT_BENCH_SLOTS").map(_.toInt)
-      .getOrElse(shuffleParts)
-
     // pinned-run mode: one level per JVM (driven under `taskset -c 0..N-1` so
     // GC/compiler/IO threads share the N cpus exactly like an N-core
     // executor); results append to a JSONL file assembled externally
     val jsonOut = sys.env.get("SPARK_GRAFT_BENCH_JSON_OUT")
     if (jsonOut.isDefined) {
       val n = levels.head
-      val (u, t) = measure(n, shuffleParts, nPages, nSeeds, rounds, slots, warmup = true)
+      val (u, t) = measure(n, shuffleParts, nPages, nSeeds, rounds, warmup = true)
       val line = s"""{"level":$n,"urls":$u,"secs":$t,"pages":$nPages}"""
       java.nio.file.Files.writeString(java.nio.file.Paths.get(jsonOut.get), line + "\n",
         java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
@@ -183,7 +126,7 @@ object ScalingBench {
     }
 
     val results = levels.map { n =>
-      val (u, t) = measure(n, shuffleParts, nPages, nSeeds, rounds, slots, warmup = true)
+      val (u, t) = measure(n, shuffleParts, nPages, nSeeds, rounds, warmup = true)
       println(f"level local[$n]: $u urls in $t%.1f s (${u / t}%.0f urls/s)")
       (n, u, t)
     }
@@ -215,7 +158,7 @@ object ScalingBench {
          |scaling efficiency >= 0.8 from N to 4N parallelism. No real cluster exists in
          |this sandbox, so the criterion is evidenced by running the IDENTICAL job on
          |the IDENTICAL input at several local[] parallelism levels (same seed, same
-         |plan: shuffle partitions = $shuffleParts, politeness slots = $slots at every
+         |plan: shuffle partitions = politeness slots = $shuffleParts at every
          |level; outputs verified identical across levels — the run aborts otherwise).
          |
          |Workload: $nPages-page synthetic web, $nSeeds seeds, $rounds rounds,

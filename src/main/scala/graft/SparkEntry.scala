@@ -983,7 +983,7 @@ object SparkEntry {
       // the result still hash-matches the oracle's md5 replay — verified
       // against the oracle SQL in DuckDB 1.0.0 at sf0.01 this round). The
       // O(n·k) per-shingle md5 kernel measured 2.1x the whole operator
-      // (Q85Prof: 1.93 s vs 0.92 s warm at sf0.1).
+      // (1.93 s vs 0.92 s warm at sf0.1).
       graft.ops.DedupOps.exactSubstringDedup(
           t(s, dir, "documents"), "doc_id", "text", minTokens = 8,
           portableKeys = false)

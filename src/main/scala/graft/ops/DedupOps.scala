@@ -156,7 +156,7 @@ object DedupOps {
     // — near-dup corpora have near-equal set sizes by construction, and this
     // one has a tight length distribution: p10=87, p90=311 shingles) while
     // the distinct-shingle count added ~1.6 s to the signature pipeline
-    // (5.96 s -> 7.58 s warm, identical output hash; Q23Check/Q23Sel tools).
+    // (5.96 s -> 7.58 s warm, identical output hash).
     // Keep it in mind for corpora with heavy-tailed document lengths.
     // ALSO REJECTED: a signature-agreement prefilter before exact verify.
     // Every band-collision pair matches >= rowsPerBand consecutive slots by
@@ -261,7 +261,7 @@ object DedupOps {
     val withH = prep.select(col("id"),
       graft.functions.SketchExprs.portable_shingle_hashes(col("norm"), k).as("hs"))
       .localCheckpoint(false) // lazy: materializes inside the first consumer's
-    // job instead of a dedicated eager job (measured ~0.4 s at sf0.1, Q57Var)
+    // job instead of a dedicated eager job (measured ~0.4 s at sf0.1)
     // per-slot min of XOR-salted hashes, as ONE kernel pass over the hash
     // set (round 7): the HOF form ran numHashes array_min(transform(...))
     // passes, each allocating an XOR'd copy of the hash array per row —

@@ -1,18 +1,45 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
-/** Round-7 measurement harness (guide §1): times a subset of SparkEntry
-  * queries through the noop sink with an untimed sf0.001 warm-up pass and
-  * N timed repetitions at the target scale, reporting every sample plus
-  * min/median — the low-noise signal for before/after comparison on a
-  * shared noisy box. Usage:
+import graft.obs.QueryProfile
+
+/** One query's timed samples (seconds), its output row count, an
+  * order-insensitive hash of its output, and the profile of its fastest rep. */
+final case class QueryRun(query: String, samples: Seq[Double], min: Double, median: Double,
+                          rows: Long, hash: String, profile: QueryProfile)
+
+/** The query runner: times SparkEntry queries through the noop sink with an
+  * untimed sf0.001 warm-up pass and N timed repetitions at the target scale,
+  * and prints one JSON line per query (a [[QueryRun]]): every sample,
+  * min/median, the [[QueryProfile]] of the min rep (jobs, stages, task/GC
+  * seconds, shuffle and spill, driver-serial time, top stages, per-operator
+  * SQLMetrics), then the row count and output hash of one untimed pass. The
+  * hash is the check for output-preserving changes: run before and after,
+  * it must not move. Usage:
   *   SPARK_GRAFT_REPS=3 sbt "runMain graft.tools.BenchExtra q23 q85 ..."
   * (no args = the full suite). Does NOT replace graft.Bench, which is the
-  * frozen driver contract; numbers cited in OPTIMIZATION_r07.md come from
-  * here.
+  * frozen driver contract.
   */
 object BenchExtra {
+
+  /** Times `reps` noop-sink runs of `build`, then counts and hashes its
+    * output in one untimed aggregate: Σ xxhash64 over all columns, summed as
+    * a decimal so it cannot overflow and does not depend on row order. */
+  def run(spark: SparkSession, name: String, reps: Int)(build: => DataFrame): QueryRun = {
+    spark.sparkContext.setJobDescription(name)
+    val profiles = (1 to reps).map { _ =>
+      QueryProfile.of(spark)(build.write.format("noop").mode("overwrite").save())
+    }
+    val samples = profiles.map(_.wallSecs)
+    val sorted = samples.sorted
+    val out = build.agg(count(lit(1)),
+      coalesce(sum(xxhash64(col("*")).cast("decimal(20,0)")), lit(0))).head()
+    QueryRun(name, samples, sorted.head, sorted(sorted.size / 2),
+      out.getLong(0), out.get(1).toString, profiles.minBy(_.wallSecs))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -33,15 +60,8 @@ object BenchExtra {
       catch { case e: Throwable => System.err.println(s"[warmup] $name: ${e.getMessage}") }
     }
     sel.foreach { case (name, fn) =>
-      spark.sparkContext.setJobDescription(name)
-      val samples = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val sorted = samples.sorted
-      val med = sorted(sorted.size / 2)
-      println(f"$name: min=${sorted.head}%.3f med=$med%.3f samples=${samples.map(s => f"$s%.3f").mkString(",")}")
+      val r = run(spark, name, reps)(fn(spark, sfDir))
+      println(org.json4s.jackson.Serialization.write(r)(org.json4s.DefaultFormats))
     }
     spark.stop()
   }

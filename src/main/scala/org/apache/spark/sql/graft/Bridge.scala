@@ -18,4 +18,10 @@ object Bridge {
     * job-end events flushed before reading listener state. */
   def waitListenerBusEmpty(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** Operator scopes of a stage's RDDs in lineage order (e.g.
+    * `WholeStageCodegen (2)`, `Exchange`): the plan operators a stage runs.
+    * `RDDOperationScope` is private[spark]. */
+  def stageScopes(info: org.apache.spark.scheduler.StageInfo): Seq[String] =
+    info.rddInfos.sortBy(_.id).flatMap(_.scope.map(_.name)).distinct
 }

@@ -54,8 +54,12 @@ class Blake3Spec extends SparkSpec {
 
   test("warc_blake3 column expression produces the prefixed format") {
     import spark.implicits._
-    val d = Seq("hello world").toDF("t")
-      .select(warc_blake3(col("t"))).head().getString(0)
-    assert(d === "blake3:d74981efa70a0c880b8d8c1985d075dbcbf679b99a5f9914e5aaf96b831a9e24")
+    val big = "x" * 3000 // three chunks: the multi-chunk tree path
+    val d = Seq(Some("hello world"), None, Some(big)).toDF("t")
+      .select(warc_blake3(col("t"))).collect().map(r => Option(r.getString(0)))
+    assert(d.toSeq === Seq(
+      Some("blake3:d74981efa70a0c880b8d8c1985d075dbcbf679b99a5f9914e5aaf96b831a9e24"),
+      None, // null in, null out
+      Some("blake3:" + hex(Blake3.hash(big.getBytes("UTF-8"))))))
   }
 }

@@ -30,6 +30,10 @@ class SmokeSpec extends SparkSpec {
     }
   }
 
+  test("SparkEntry.entry returns rows (its smoke contract: rows > 0)") {
+    assert(SparkEntry.entry(spark).count() > 0)
+  }
+
   test("two crawl rounds produce warc rows, revisits, and growing seen set") {
     val n = 300L
     val pages = SyntheticWeb.pages(spark, n).cache()

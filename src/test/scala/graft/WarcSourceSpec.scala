@@ -197,6 +197,38 @@ class WarcSourceSpec extends SparkSpec {
     assert(q.count() === 6) // 5 records + the file's warcinfo
   }
 
+  test("an empty directory scans to zero rows") {
+    val dir = Files.createTempDirectory("warcempty").toString
+    assert(spark.read.format(Fmt).load(dir).count() === 0)
+  }
+
+  test("non-WARC files beside a WARC file are ignored") {
+    val dir = Files.createTempDirectory("warcmixed")
+    Files.write(dir.resolve("notes.txt"), "not a warc".getBytes("UTF-8"))
+    WarcSink.write(sampleRows(3).coalesce(1), dir.toString)
+    assert(spark.read.format(Fmt).load(dir.toString).count() === 4) // + warcinfo
+  }
+
+  test("trailing non-gzip bytes: ignored through the sidecar index, fatal without it") {
+    val dir = Files.createTempDirectory("warcgarbage")
+    WarcSink.write(sampleRows(3).coalesce(1), dir.toString)
+    val warc = dir.toFile.listFiles().find(_.getName.endsWith(".warc.gz")).get.toPath
+    val end = Files.size(warc)
+    Files.write(warc, "GARBAGE-NOT-GZIP".getBytes("US-ASCII"),
+      java.nio.file.StandardOpenOption.APPEND)
+    // the sidecar lists every member, so the scan stops at the last one
+    assert(spark.read.format(Fmt).load(dir.toString).count() === 4) // 3 records + warcinfo
+    assert(spark.read.format(Fmt).option("maxPartitionBytes", "512")
+      .load(dir.toString).count() === 4)
+    // an index-less file is read member by member to its end: the bytes
+    // after the last member are not a gzip member, and the scan fails
+    Files.delete(java.nio.file.Paths.get(warc.toString + ".idx"))
+    val e = intercept[org.apache.spark.SparkException] {
+      spark.read.format(Fmt).load(dir.toString).count()
+    }
+    assert(e.getMessage.contains(s"bad gzip member magic 4741 at offset $end"), e.getMessage)
+  }
+
   test("crawl warc_rows ship through toRecordColumns and round-trip") {
     val n = 120L
     val res = graft.jobs.Crawl.run(spark,
